@@ -323,6 +323,27 @@ def test_ivf_search_nonfinite_centroid_falls_back(spark):
     assert [r["vec_id"] for r in sorted(rows, key=lambda r: r["rank"])] == [10, 11]
 
 
+def test_ivf_search_null_centroid_element_falls_back(spark):
+    """A NULL inside one centroid takes the general-plan fallback like a
+    NaN does (it cannot be rendered as a finite literal) instead of
+    raising while the inline plan is prepared."""
+    from v3_polars_spark.datapipe import ivf_search
+
+    centroids = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [None, 1.0])],
+        "cluster_id long, centroid array<double>",
+    )
+    assigned = spark.createDataFrame(
+        [(0, 10, [1.0, 0.1]), (0, 11, [0.9, 0.2]), (1, 20, [0.0, 1.0])],
+        "cluster_id long, vec_id long, __v array<double>",
+    )
+    q = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "query_id long, embedding array<double>"
+    )
+    rows = ivf_search(centroids, assigned, q, k=2, n_probe=2).collect()
+    assert [r["vec_id"] for r in sorted(rows, key=lambda r: r["rank"])] == [10, 11]
+
+
 def test_ivf_search_null_vn_recomputes_norm(spark):
     """Mixed-schema persisted index: rows whose __vn is NULL (segments
     written before the column existed) must recompute the norm instead

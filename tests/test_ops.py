@@ -360,6 +360,33 @@ def test_asof_same_source_matches_generic(spark):
     assert [key(r) for r in a] == [key(r) for r in b]
 
 
+def test_asof_same_source_null_right_filter_keeps_exact_match(spark):
+    """Left rows on which the right filter evaluates NULL (not False) must
+    still sort after the right rows at the same ``on`` and see the exact
+    match — a NULL side key would sort first and hide it."""
+    from v3_polars_spark.ops import asof_join_same_source
+
+    df = spark.createDataFrame(
+        [
+            (1, 3, True, 0, 30.0),
+            (1, 5, True, 1, 50.0),
+            (1, 5, None, 2, None),  # exact on-match of the t=5 right row
+            (1, 4, None, 3, None),
+        ],
+        "k long, t long, flag boolean, uid long, v double",
+    )
+    out = asof_join_same_source(
+        df,
+        left_filter=F.col("flag").isNull(),
+        right_filter=F.col("flag"),
+        on="t",
+        by=["k"],
+        values={"v": "rv"},
+        tiebreak=["uid"],
+    )
+    assert {r["uid"]: r["rv"] for r in out.collect()} == {2: 50.0, 3: 30.0}
+
+
 def test_asof_same_source_zero_exchanges_off_keyed_cache(spark):
     """Off a by-clustered source, the same-source plan needs NO exchange
     (the point of the formulation — the union form re-shuffled the whole

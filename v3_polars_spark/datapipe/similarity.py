@@ -463,13 +463,17 @@ def ivf_search(
         _INLINE_CENTROIDS + 1
     ).collect()
     # Inline only when every centroid component AND its norm are finite:
-    # a NaN/Inf component (reachable when any corpus embedding carries
-    # NaN — ivf_build's means propagate it) would render as 'nanD' /
-    # 'infD', which Spark SQL cannot parse, and an overflowed norm would
-    # change the cosine; the general plan merely produces NaN cosines
-    # ranked deterministically, so it is the safe fallback.
+    # a NULL or NaN/Inf component (NaN is reachable when any corpus
+    # embedding carries NaN — ivf_build's means propagate it) would
+    # render as 'nanD' / 'infD', which Spark SQL cannot parse, and an
+    # overflowed norm would change the cosine; the general plan merely
+    # produces NULL/NaN cosines ranked deterministically, so it is the
+    # safe fallback.
     def _row_finite(row) -> bool:
-        vec = [float(y) for y in (row["centroid"] or [])]
+        vec = row["centroid"] or []
+        if None in vec:
+            return False
+        vec = [float(y) for y in vec]
         return all(map(math.isfinite, vec)) and math.isfinite(
             math.sqrt(sum((v * v for v in vec), 0.0))
         )

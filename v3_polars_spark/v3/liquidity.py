@@ -209,10 +209,10 @@ def _timeline_grid(mb: DataFrame, frames: list[float], by: list[str]) -> DataFra
     )
     deltas = lower.unionByName(upper)
 
-    # first frame strictly after the event; events after the last frame drop
-    first_frame = F.element_at(
-        F.filter(frames_arr, lambda f: f > F.col("as_of")), 1
-    )
+    # first frame strictly after the event; events at or after the last
+    # frame get NULL (``get`` past the end; ``element_at`` raises under
+    # ANSI) and drop
+    first_frame = F.get(F.filter(frames_arr, lambda f: f > F.col("as_of")), 0)
     per_frame = (
         deltas.withColumn("frame_as_of", first_frame)
         .filter(F.col("frame_as_of").isNotNull())

@@ -1,9 +1,18 @@
 """Pool facade — the engine's analog of the reference's ``v3Pool``
 (reference v3/state.py:8-331).
 
-Differences by design (Spark-first):
-- table materialization uses ``df.cache()`` (executor-memory columnar
-  cache) instead of driver RAM;
+Like the reference, the scalar API (``get_tick_at``, ``get_price_at``,
+``calc_swap_df``, ``swap_in``) is served from a per-pool driver snapshot
+of the pool's events: one Arrow collect of the tenant-filtered swaps and
+one of the mint/burns, taken when the Pool opens (or on the first scalar
+call with ``pull=False``). After that, as-of lookups and swap quotes run
+no Spark job. Driver memory is bounded by one pool's events; the
+multi-pool composites (``liquidity_distribution_multi``,
+``quote_ladder_multi``, ``liquidity_timeline``) are the scale path.
+
+Other design points:
+- the Spark frames ``swaps`` / ``mb`` stay available (lazily cached) for
+  the series API and as the reference the snapshot math is tested against;
 - every ordered op has explicit (block_number, transaction_index, log_index)
   determinism keys;
 - the swap precompute keeps the reference's single-slot memo keyed by exact
@@ -12,6 +21,9 @@ Differences by design (Spark-first):
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,7 +33,16 @@ from . import swap_math as sm
 from .liquidity import liquidity_distribution
 from .series import bn_at_date as _bn_at_date
 from .series import price_series as _price_series
-from .swap import InRangeValues, in_range_values, quote_ladder, swap_frame, swap_in
+from .swap import InRangeValues, in_range_values, quote_ladder, swap_in
+
+_SWAP_COLS = ["as_of", "log_index", "block_number", "tick", "sqrtPriceX96"]
+_MB_COLS = ["amount", "type_of_event", "tick_lower", "tick_upper", "as_of", "block_number"]
+# the columns of ``swap_frame``: the rows ``calc_swap_df`` returns
+_SWAP_ROW_COLS = ("liquidity", "tick_a", "tick_b", "p_a", "p_b", "yInTick", "xInTick")
+_SWAP_ROW_SCHEMA = (
+    "liquidity double, tick_a long, tick_b long, p_a double, p_b double, "
+    "yInTick double, xInTick double"
+)
 
 
 class UninitializedPoolError(AssertionError):
@@ -29,6 +50,81 @@ class UninitializedPoolError(AssertionError):
     set and the pool has no state at ``as_of`` (reference state.py:226,241
     uses a bare assert; subclassing AssertionError keeps except-clauses
     written against the reference's behavior working)."""
+
+
+def _tick_sums(ticks: np.ndarray, deltas: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per-tick sums of ``deltas``, dropping ticks that sum to 0."""
+    t, inv = np.unique(ticks, return_inverse=True)
+    s = np.bincount(inv, weights=deltas, minlength=len(t))
+    keep = s != 0
+    return t[keep], s[keep]
+
+
+class _Snapshot:
+    """One pool's events on the driver (the reference v3Pool's in-memory
+    state, state.py:97-106): swaps sorted by ``(as_of, log_index)`` for
+    as-of lookups, mint/burn columns for the liquidity distribution."""
+
+    def __init__(self, swaps: pa.Table, mb: pa.Table):
+        bounds = [pc.max(swaps["block_number"]).as_py(), pc.max(mb["block_number"]).as_py()]
+        # a pool can have one table empty (initialized but never traded,
+        # or never minted): the completeness watermark is then undefined —
+        # keep the -1 sentinel instead of min(None, int)
+        self.max_supported = min(bounds) if None not in bounds else -1
+
+        # NULL as_of never satisfies the strict ``as_of < X`` filter
+        swaps = swaps.filter(pc.is_valid(swaps["as_of"]))
+        self.swaps = swaps.sort_by(
+            [("as_of", "ascending"), ("log_index", "ascending")]
+        ).combine_chunks()
+        self.swap_as_of = self.swaps["as_of"].to_numpy()
+
+        # mint/burns as signed tick deltas, one (as_of, tick, delta) triple
+        # of arrays per side: +amount*type at tick_lower, minus at
+        # tick_upper. Rows with a NULL as_of, delta or tick add nothing
+        # (Spark's sum skips NULL; an all-NULL group sums to NULL and is
+        # dropped like a zero sum).
+        mb = mb.append_column("delta", pc.multiply(mb["amount"], mb["type_of_event"]))
+        mb = mb.filter(pc.and_(pc.is_valid(mb["as_of"]), pc.is_valid(mb["delta"])))
+        self.sides = []
+        for col, sign in (("tick_lower", 1.0), ("tick_upper", -1.0)):
+            side = mb.filter(pc.is_valid(mb[col]))
+            self.sides.append(
+                (side["as_of"].to_numpy(), side[col].to_numpy(), sign * side["delta"].to_numpy())
+            )
+
+    def value_at(self, as_of: float, column: str):
+        """``column`` of the last swap strictly before ``as_of`` (the
+        highest ``log_index`` among rows sharing one ``as_of``), or None."""
+        i = int(np.searchsorted(self.swap_as_of, float(as_of), side="left")) - 1
+        return self.swaps[column][i].as_py() if i >= 0 else None
+
+    def swap_rows(self, as_of: float, tick_spacing: int) -> list[dict]:
+        """``swap_frame(liquidity_distribution(mb, as_of), tick_spacing)``
+        computed on the driver: strict ``<`` on as_of; per-tick lower and
+        upper sums with zero sums dropped; outer merge on tick; prefix sum
+        in tick order; keep ``liquidity > 0``; ``tick_b`` is the next kept
+        tick, the last capped at ``(MAX_TICK // ts) * ts``."""
+        x = float(as_of)
+        (t_lo, s_lo), (t_up, s_up) = (
+            _tick_sums(ticks[at < x], deltas[at < x]) for at, ticks, deltas in self.sides
+        )
+        ticks = np.union1d(t_lo, t_up)
+        lower, upper = np.zeros(len(ticks)), np.zeros(len(ticks))
+        lower[np.searchsorted(ticks, t_lo)] = s_lo
+        upper[np.searchsorted(ticks, t_up)] = s_up
+        liq = np.cumsum(lower + upper)
+
+        kept = liq > 0
+        tick_a, liq = ticks[kept], liq[kept]
+        cap = (sm.MAX_TICK // tick_spacing) * tick_spacing
+        tick_b = np.append(tick_a[1:], cap)[: len(tick_a)]
+        p_a = np.power(1.0001, tick_a / 2.0)
+        p_b = np.power(1.0001, tick_b / 2.0)
+        y_in = liq * (p_b - p_a)
+        x_in = liq * ((p_b - p_a) / (p_b * p_a))
+        cols = (liq, tick_a, tick_b, p_a, p_b, y_in, x_in)
+        return [dict(zip(_SWAP_ROW_COLS, r)) for r in zip(*(c.tolist() for c in cols))]
 
 
 class Pool:
@@ -45,13 +141,17 @@ class Pool:
         save_path: str | None = None,
         refresh: bool = False,
     ):
-        """``save_path`` is the cross-session analog of the reference's
+        """``pull=True`` takes the driver snapshot now (and sets
+        ``max_supported``); ``pull=False`` defers it to the first scalar
+        call. The snapshot is never refreshed: re-open the Pool to see
+        events that landed after it was taken.
+
+        ``save_path`` is the cross-session analog of the reference's
         ``readFromMemoryOrDisk(save=True)`` (state.py:114-174): the
         preprocessed (tenant-filtered, as_of-keyed) swap / mint-burn
         frames are persisted as parquet under ``save_path/<table>/`` on
         first access and read straight back on later Pool inits —
-        skipping the raw-table scan + filter entirely. In-session reuse
-        is covered either way by ``.cache()``.
+        skipping the raw-table scan + filter entirely.
 
         Staleness: unlike the reference's per-session in-memory cache
         (which can never outlive its data), a persisted frame CAN go
@@ -82,19 +182,13 @@ class Pool:
         self.token0 = rows[0]["token0"]
         self.token1 = rows[0]["token1"]
 
+        self._sources: dict[str, DataFrame] = {}
         self._swaps: DataFrame | None = None
         self._mb: DataFrame | None = None
+        self._snap: _Snapshot | None = None
         self.max_supported = -1
         if pull:
-            s, m = self.swaps, self.mb
-            bounds = [
-                s.agg(F.max("block_number")).first()[0],
-                m.agg(F.max("block_number")).first()[0],
-            ]
-            # a pool can have one table empty (initialized but never
-            # traded, or never minted): the completeness watermark is then
-            # undefined — keep the -1 sentinel instead of min(None, int)
-            self.max_supported = min(bounds) if all(b is not None for b in bounds) else -1
+            self.max_supported = self.snapshot.max_supported
 
     # readFromMemoryOrDisk analogs (reference state.py:114-174) ------------
     def _saved_or(self, table: str, build) -> DataFrame:
@@ -145,45 +239,57 @@ class Pool:
             self.spark.catalog.refreshByPath(loc)
         return self.spark.read.parquet(loc)
 
+    def _build(self, table: str) -> DataFrame:
+        """The tenant-filtered, as_of-keyed frame of one event table."""
+        df = T.tenant_filter(
+            T.read_table(self.spark, self.data_path, table), self.chain, self.pool
+        )
+        if table == "pool_mint_burn_events":
+            df = df.withColumns(
+                {
+                    "amount": F.col("amount").cast("double"),
+                    "tick_lower": F.col("tick_lower").cast("long"),
+                    "tick_upper": F.col("tick_upper").cast("long"),
+                    "type_of_event": F.col("type_of_event").cast("double"),
+                }
+            )
+        return T.with_as_of(df)
+
+    def _source(self, table: str) -> DataFrame:
+        """The (uncached) preprocessed frame of ``table``, resolved through
+        ``save_path`` once per Pool."""
+        if table not in self._sources:
+            self._sources[table] = self._saved_or(table, lambda: self._build(table))
+        return self._sources[table]
+
     @property
     def swaps(self) -> DataFrame:
         if self._swaps is None:
-            def build() -> DataFrame:
-                df = T.tenant_filter(
-                    T.read_table(self.spark, self.data_path, "pool_swap_events"),
-                    self.chain,
-                    self.pool,
-                )
-                return T.with_as_of(df)
-
-            self._swaps = self._saved_or("pool_swap_events", build).cache()
+            self._swaps = self._source("pool_swap_events").cache()
         return self._swaps
 
     @property
     def mb(self) -> DataFrame:
         if self._mb is None:
-            def build() -> DataFrame:
-                df = T.tenant_filter(
-                    T.read_table(
-                        self.spark, self.data_path, "pool_mint_burn_events"
-                    ),
-                    self.chain,
-                    self.pool,
-                ).withColumns(
-                    {
-                        "amount": F.col("amount").cast("double"),
-                        "tick_lower": F.col("tick_lower").cast("long"),
-                        "tick_upper": F.col("tick_upper").cast("long"),
-                        "type_of_event": F.col("type_of_event").cast("double"),
-                    }
-                )
-                return T.with_as_of(df)
-
-            self._mb = self._saved_or("pool_mint_burn_events", build).cache()
+            self._mb = self._source("pool_mint_burn_events").cache()
         return self._mb
+
+    @property
+    def snapshot(self) -> _Snapshot:
+        """The driver snapshot the scalar API reads, taken on first use."""
+        if self._snap is None:
+            self._snap = _Snapshot(
+                self._source("pool_swap_events").select(*_SWAP_COLS).toArrow(),
+                self._source("pool_mint_burn_events").select(*_MB_COLS).toArrow(),
+            )
+        return self._snap
 
     # point-in-time getters (reference state.py:197-244) ------------------
     def get_property_at(self, as_of: float, column: str):
+        """Value of a swap column in force just before ``as_of``; columns
+        outside the snapshot are looked up on the Spark frame."""
+        if column in _SWAP_COLS:
+            return self.snapshot.value_at(as_of, column)
         return asof_lookup_scalar(self.swaps, "as_of", float(as_of), column)
 
     def get_tick_at(
@@ -208,14 +314,15 @@ class Pool:
     def create_liq(self, as_of: float) -> DataFrame:
         return liquidity_distribution(self.mb, as_of)
 
-    def calc_swap_df(self, as_of: float):
-        """createSwapDF with the single-slot memo (reference state.py:176-195)."""
+    def calc_swap_df(self, as_of: float) -> tuple[list[dict], InRangeValues]:
+        """createSwapDF with the single-slot memo (reference state.py:176-195),
+        computed from the snapshot: the rows of
+        ``swap_frame(create_liq(as_of), ts)`` with no Spark job."""
         if self._cache.get("as_of") == as_of:
             return self._cache["swap_rows"], self._cache["irv"]
         price = self.get_price_at(as_of)
         assert price is not None, "Pool not initialized"
-        sdf = swap_frame(self.create_liq(as_of), self.ts)
-        rows = [r.asDict() for r in sdf.collect()]  # O(#ticks) — driver idiom
+        rows = self.snapshot.swap_rows(as_of, self.ts)
         irv = in_range_values(rows, float(price), self.ts)
         self._cache.update({"as_of": as_of, "swap_rows": rows, "irv": irv})
         return rows, irv
@@ -251,11 +358,14 @@ class Pool:
     ) -> DataFrame:
         """Batched swapIn: quote every amount in ``amounts`` at one as_of in
         a single distributed plan (forward as-of join on cumulative depth).
-        Bit-identical to looping swap_in; ``fees=True`` adds the per-tick
-        fee attribution array (scalar fee_dict parity); see
+        The depth side is the ``calc_swap_df`` rows themselves, so results
+        are bit-identical to looping swap_in; ``fees=True`` adds the
+        per-tick fee attribution array (scalar fee_dict parity); see
         swap.quote_ladder."""
-        _, irv = self.calc_swap_df(as_of)
-        sdf = swap_frame(self.create_liq(as_of), self.ts)
+        rows, irv = self.calc_swap_df(as_of)
+        sdf = self.spark.createDataFrame(
+            [tuple(r[c] for c in _SWAP_ROW_COLS) for r in rows], _SWAP_ROW_SCHEMA
+        )
         return quote_ladder(
             sdf,
             irv,
