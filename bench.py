@@ -72,15 +72,23 @@ HEADLINE = [
     "dp_unigram",
 ]
 
-# Optional ADDITIVE extra entries for committed evidence runs (honest
-# per-execution numbers of queries outside the driver's headline set,
-# e.g. SPARK_GRAFT_BENCH_EXTRA=dp_token_shards,dp_e2e_pipeline). The
-# default headline set is never filtered or reordered.
-HEADLINE += [
-    q
-    for q in os.environ.get("SPARK_GRAFT_BENCH_EXTRA", "").split(",")
-    if q and q not in HEADLINE
-]
+
+def headline_names(extra: str, queries) -> list[str]:
+    """``HEADLINE`` plus the comma-separated ``extra`` query names.
+
+    The extras are ADDITIVE entries for committed evidence runs (honest
+    per-execution numbers of queries outside the driver's headline set,
+    e.g. SPARK_GRAFT_BENCH_EXTRA=dp_token_shards,dp_e2e_pipeline); the
+    default headline set is never filtered or reordered. A name that is
+    not in ``queries`` exits with the list of valid names."""
+    extras = [q for q in extra.split(",") if q]
+    unknown = [q for q in extras if q not in queries]
+    if unknown:
+        raise SystemExit(
+            f"SPARK_GRAFT_BENCH_EXTRA: unknown queries {unknown}; "
+            f"valid names: {', '.join(sorted(queries))}"
+        )
+    return HEADLINE + [q for q in extras if q not in HEADLINE]
 
 
 def _force(df) -> int:
@@ -96,6 +104,8 @@ def main() -> None:
         tune_shuffle_partitions,
     )
 
+    qs = entrymod.queries()
+    headline = headline_names(os.environ.get("SPARK_GRAFT_BENCH_EXTRA", ""), qs)
     spark = get_spark(app_name="bench")
     # mute the expected WindowExec no-partition warning from the O(ticks)
     # v3 frames; data-sized frames are pinned window-partitioned by
@@ -115,7 +125,6 @@ def main() -> None:
         reset_intermediates,
     )
 
-    qs = entrymod.queries()
     sf = SF_DIR.rstrip("/").split("sf")[-1]
 
     # untimed warm-up pass: run every headline query once so JIT/codegen
@@ -124,7 +133,7 @@ def main() -> None:
     # intermediates built here are dropped again before every timed trial
     # (reset_intermediates below) — the warm-up only buys compilation and
     # base-cache state, never query results.
-    for name in HEADLINE:
+    for name in headline:
         _force(qs[name](spark, SF_DIR))
 
     # PAIRED measurement: the two engines alternate per trial of the SAME
@@ -134,13 +143,13 @@ def main() -> None:
     oracles = entrymod.oracle_sql()
     con = _duckdb_connection()
     if con is not None:
-        for name in HEADLINE:  # symmetric untimed warm-up (see docstring)
+        for name in headline:  # symmetric untimed warm-up (see docstring)
             if oracles.get(name):
                 con.execute(oracles[name]).fetchall()
 
     timings: dict[str, float] = {}
     duck_timings: dict[str, float] = {}
-    for name in HEADLINE:
+    for name in headline:
         fn = qs[name]
         sql = oracles.get(name)
         s_best = d_best = float("inf")

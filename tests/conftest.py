@@ -17,6 +17,24 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(group, fn)``: the ids of the Spark jobs ``fn`` runs,
+    read back through ``statusTracker`` from a job group of its own."""
+    sc = spark.sparkContext
+
+    def count(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

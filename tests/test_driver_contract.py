@@ -121,3 +121,23 @@ def test_cache_splits_handles_directory_parquet(tmp_path):
         sparkContext = _SC()
 
     assert em._cache_splits(_Spark(), str(tmp_path), "lineitem") == 8
+
+
+def test_bench_rejects_unknown_extra_before_session(monkeypatch):
+    """A typo in SPARK_GRAFT_BENCH_EXTRA stops bench.py with the valid
+    names before any Spark session or cache is built."""
+    import pytest
+
+    import bench
+    from v3_polars_spark import session
+
+    def no_session(*a, **k):
+        raise AssertionError("session started before the names were checked")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_EXTRA", "dp_chunk,dp_e2e_pipelnie")
+    with pytest.raises(SystemExit, match="dp_e2e_pipelnie") as err:
+        bench.main()
+    assert "valid names:" in str(err.value) and "dp_e2e_pipeline" in str(err.value)
+    extra = bench.headline_names("dp_chunk,dp_e2e_pipeline", em.queries())
+    assert extra == bench.HEADLINE + ["dp_e2e_pipeline"]

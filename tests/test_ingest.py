@@ -1,10 +1,19 @@
 """Golden-replay ingest tests — the reference's own test strategy
 (test_helpers.py:29-68: re-pull capped history, compare sorted frames to
-the checked-in examples), re-expressed for the Spark engine."""
+the checked-in examples), re-expressed for the Spark engine.
 
+The upstream is a small two-chain v3 fixture built here: string big
+ints, a hive ``chain_name=<chain>`` layout, and one pool address shared
+by both chains. Its ethereum side is shaped like the reference's
+examples up to the 1000th mainnet swap: 1001 swaps, the last one at
+``CAP``, and a pool whose liquidity spans 123 ticks."""
+
+import datetime
 import os
+import shutil
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from v3_polars_spark import tables as T
@@ -17,7 +26,95 @@ from v3_polars_spark.sources import (
 )
 
 POOL = "0x1d42064fc4beb5f8aaf85f4617ae8b3b5b8bd801"
+OTHER = "0x" + "cd" * 20
 CAP = 12376625  # "the 1000th swap on mainnet" (reference data_update.py:136-137)
+CHAINS = {  # chain: (first block, last block, seconds per block)
+    "ethereum": (12369739, CAP, 12),
+    "arbitrum": (2_000_000, 2_000_600, 1),
+}
+ETH_MID, ARB_MID = 12373000, 2_000_300  # where the partial landing stops
+EVENT_TABLES = ["pool_swap_events", "pool_mint_burn_events"]
+T0 = datetime.datetime(2021, 5, 4, 19, 52, 36, tzinfo=datetime.timezone.utc)
+# (tick_lower, tick_upper, amount, type_of_event) of POOL on ethereum:
+# 61 nested positions plus one sharing tick -60 make 123 ticks; the
+# outermost amount is the liquidity at the lowest tick
+POSITIONS = [
+    (-60 * (k + 1), 60 * (k + 1), str(10**18 * (k + 1)), 1) for k in range(60)
+] + [
+    (-3660, 3660, "216157433393063170000", 1),
+    (-60, 4200, "5000000000000000000", 1),
+    (-300, 300, "2000000000000000000", -1),  # a partial burn of k=4
+]
+
+
+def _row(table: str, chain: str, block: int, i: int, **cols) -> dict:
+    first, _, secs = CHAINS[chain]
+    ts = T0 + datetime.timedelta(seconds=(block - first) * secs)
+    row = {f.name: None for f in T.SCHEMAS[table].fields}
+    row.update(
+        chain_name=chain, block_number=block, block_timestamp=ts,
+        transaction_hash=f"0x{chain[:3]}{table[:8]}{i:08x}", log_index=i % 7,
+    )
+    if table != "factory_pool_created":
+        row.update(transaction_index=i % 50, from_address="0x" + "ee" * 20)
+    row.update(cols)
+    return row
+
+
+def _swap(chain: str, block: int, i: int, address: str) -> dict:
+    tick = (i * 37) % 2000 - 1000
+    return _row(
+        "pool_swap_events", chain, block, i, address=address, tick=str(tick),
+        sqrtPriceX96=str(int(1.0001 ** (tick / 2) * 2**96)),
+        amount0=str(10**20 + 7919 * i), amount1=str(-(10**21) - 104729 * i),
+        liquidity=str(3 * 10**21 + i),
+    )
+
+
+def _upstream_rows() -> dict[str, list[dict]]:
+    rows = {t: [] for t in T.TABLES}
+    for chain, (first, last, _) in CHAINS.items():
+        n = 1001 if chain == "ethereum" else 120
+        blocks = [first + i * (last - first) // (n - 1) for i in range(n)]
+        for addr, (fee, ts) in ((POOL, ("3000", "60")), (OTHER, ("500", "10"))):
+            rows["factory_pool_created"].append(_row(
+                "factory_pool_created", chain, first, 0, pool=addr, fee=fee,
+                tickSpacing=ts, token0="0x" + "01" * 20, token1="0x" + "02" * 20,
+            ))
+            rows["pool_initialize_events"].append(_row(
+                "pool_initialize_events", chain, first, 1, address=addr,
+                sqrtPriceX96=str(2**96), tick="0",
+            ))
+        rows["pool_swap_events"] += [
+            _swap(chain, b, i, OTHER if i % 3 == 0 else POOL) for i, b in enumerate(blocks)
+        ]
+        positions = POSITIONS if chain == "ethereum" else POSITIONS[:5]
+        rows["pool_mint_burn_events"] += [
+            _row(
+                "pool_mint_burn_events", chain, blocks[2 * k], k, address=POOL,
+                amount=amt, tick_lower=str(lo), tick_upper=str(hi), type_of_event=kind,
+            )
+            for k, (lo, hi, amt, kind) in enumerate(positions)
+        ] + [
+            _row(
+                "pool_mint_burn_events", chain, blocks[3 * k + 1], 500 + k, address=OTHER,
+                amount=str(10**19), tick_lower=str(-10 * k - 10), tick_upper="100",
+                type_of_event=1,
+            )
+            for k in range(20)
+        ]
+    return rows
+
+
+@pytest.fixture(scope="module")
+def upstream(spark, tmp_path_factory):
+    """The upstream tables, hive-partitioned by chain_name."""
+    root = str(tmp_path_factory.mktemp("upstream"))
+    for table, rows in _upstream_rows().items():
+        spark.createDataFrame(rows, T.SCHEMAS[table]).write.partitionBy(
+            "chain_name"
+        ).parquet(os.path.join(root, table))
+    return root
 
 
 def _sorted_pandas(df, order_cols):
@@ -30,13 +127,13 @@ def _sorted_pandas(df, order_cols):
 
 
 @pytest.fixture(scope="module")
-def landed(spark, ref_examples, tmp_path_factory):
-    """Replay the full ingest of swaps + mint/burns from the example data
+def landed(spark, upstream, tmp_path_factory):
+    """Replay the full ingest of swaps + mint/burns from the upstream
     with a small segment size to force multiple loop iterations."""
     data_path = str(tmp_path_factory.mktemp("landed"))
-    conn = LocalParquetConnector(spark, ref_examples)
+    conn = LocalParquetConnector(spark, upstream)
     n = {}
-    for table in ["pool_swap_events", "pool_mint_burn_events"]:
+    for table in EVENT_TABLES:
         n[table] = update_table(
             spark, conn, data_path, table, "ethereum",
             tgt_max_rows=300, max_block_cap=CAP,
@@ -44,7 +141,7 @@ def landed(spark, ref_examples, tmp_path_factory):
     return data_path, n
 
 
-def test_segmented_replay_matches_source(spark, ref_examples, landed):
+def test_segmented_replay_matches_source(spark, upstream, landed):
     data_path, n_segments = landed
     assert n_segments["pool_swap_events"] >= 3  # 1001 rows / 300-row segments
 
@@ -53,7 +150,7 @@ def test_segmented_replay_matches_source(spark, ref_examples, landed):
             T.read_table(spark, data_path, table), "ethereum", POOL
         )
         want = T.tenant_filter(
-            spark.read.parquet(f"{ref_examples}/{table}"), "ethereum", POOL
+            spark.read.parquet(f"{upstream}/{table}"), "ethereum", POOL
         )
         order = ["block_number", "transaction_index", "log_index"]
         gp = _sorted_pandas(got, order)
@@ -63,9 +160,9 @@ def test_segmented_replay_matches_source(spark, ref_examples, landed):
         assert gp.equals(wp), f"{table} landed data differs from source"
 
 
-def test_resume_is_idempotent(spark, ref_examples, landed):
+def test_resume_is_idempotent(spark, upstream, landed):
     data_path, _ = landed
-    conn = LocalParquetConnector(spark, ref_examples)
+    conn = LocalParquetConnector(spark, upstream)
     again = update_table(
         spark, conn, data_path, "pool_swap_events", "ethereum",
         tgt_max_rows=300, max_block_cap=CAP,
@@ -93,12 +190,12 @@ def test_ovm1_rewrite(spark):
     assert out["x"]["block_timestamp"].year == 2021
 
 
-def test_pool_works_on_landed_data(spark, ref_examples, landed):
+def test_pool_works_on_landed_data(spark, upstream, landed):
     """End-to-end: the Pool facade runs its flagship queries on data landed
     by OUR ingest loop (not the original files)."""
     data_path, _ = landed
     # factory + initialize land wholesale (small tables)
-    conn = LocalParquetConnector(spark, ref_examples)
+    conn = LocalParquetConnector(spark, upstream)
     update_tables(
         spark, conn, data_path, "ethereum",
         tables=["factory_pool_created", "pool_initialize_events"],
@@ -113,14 +210,11 @@ def test_pool_works_on_landed_data(spark, ref_examples, landed):
     assert liq[0]["liquidity"] == pytest.approx(2.1615743339306317e20, rel=1e-9)
 
 
-def test_compact_segments(spark, ref_examples, tmp_path):
+def test_compact_segments(spark, upstream, tmp_path):
     """Many small appended segments compact into few right-sized files,
     preserving every row and the total-order sort for pruning."""
-    from v3_polars_spark import tables as T
-    from v3_polars_spark.sources import LocalParquetConnector, update_table
-
     data_path = str(tmp_path / "landed")
-    conn = LocalParquetConnector(spark, ref_examples)
+    conn = LocalParquetConnector(spark, upstream)
     update_table(
         spark, conn, data_path, "pool_swap_events", "ethereum",
         tgt_max_rows=200, max_block_cap=12376625,
@@ -160,3 +254,130 @@ def test_with_decimal_amounts_exact_beyond_double(spark):
         F.sum("a").alias("s")
     ).first().s
     assert int(dbl) != 3 * (2**60 + 1)  # the documented double drift
+
+
+# -- the registry as read and write contract --------------------------------
+
+
+@pytest.fixture(scope="module")
+def partial(spark, upstream, tmp_path_factory):
+    """All four tables of both chains landed part way, to ETH_MID on
+    ethereum and ARB_MID on arbitrum."""
+    data_path = str(tmp_path_factory.mktemp("partial"))
+    conn = LocalParquetConnector(spark, upstream)
+    for chain, cap in (("ethereum", ETH_MID), ("arbitrum", ARB_MID)):
+        update_tables(spark, conn, data_path, chain, max_block_cap=cap)
+    return data_path
+
+
+def test_read_table_matches_spark_read_parquet(spark, partial):
+    for table in T.TABLES:
+        got = T.read_table(spark, partial, table)
+        want = spark.read.parquet(os.path.join(partial, table)).select(*got.columns)
+        assert got.columns == T.SCHEMAS[table].fieldNames()
+        assert [f.dataType for f in got.schema] == [f.dataType for f in want.schema]
+        assert got.count() == want.count() > 0
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    # the partition column and the UTC timestamps read back as landed
+    ts = (
+        T.read_table(spark, partial, "factory_pool_created")
+        .groupBy("chain_name")
+        .agg(F.date_format(F.min("block_timestamp"), "yyyy-MM-dd HH:mm:ss").alias("t"))
+        .collect()
+    )
+    assert sorted(map(tuple, ts)) == [
+        ("arbitrum", "2021-05-04 19:52:36"), ("ethereum", "2021-05-04 19:52:36")
+    ]
+
+
+def test_read_table_missing_directory(spark, tmp_path):
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        T.read_table(spark, str(tmp_path), "pool_swap_events")
+
+
+def test_write_segment_conforms_to_registry(spark, tmp_path):
+    """A registered table lands exactly its declared columns and types; a
+    frame missing one fails before any file is written."""
+    table = "pool_swap_events"
+    df = spark.createDataFrame([_swap("ethereum", CAP, 0, POOL)], T.SCHEMAS[table])
+    with pytest.raises(AnalysisException):
+        T.write_segment(df.drop("tick"), str(tmp_path), table)
+    with pytest.raises(AnalysisException):  # string does not up-cast to long
+        T.write_segment(
+            df.withColumn("block_number", F.col("block_number").cast("string")),
+            str(tmp_path), table,
+        )
+    assert not os.path.exists(tmp_path / table)
+
+    cast = df.withColumn("log_index", F.col("log_index").cast("int"))
+    T.write_segment(cast.withColumn("extra", F.lit(1)), str(tmp_path), table)
+    back = spark.read.parquet(str(tmp_path / table))
+    assert sorted(back.schema.fields, key=lambda f: f.name) == sorted(
+        T.SCHEMAS[table].fields, key=lambda f: f.name
+    )
+
+
+# -- Pool save freshness and job budget ----------------------------------------
+
+
+def _open(spark, data_path, save):
+    from v3_polars_spark.v3 import Pool
+
+    return Pool(spark, POOL, "ethereum", data_path, save_path=save)
+
+
+def _fingerprints(save):
+    out = {}
+    for table in EVENT_TABLES:
+        p = os.path.join(save, "ethereum", POOL, table, "_RAW_FINGERPRINT")
+        out[table] = (open(p).read(), os.stat(p).st_mtime_ns)
+    return out
+
+
+@pytest.fixture
+def saved(spark, partial, tmp_path):
+    """A copy of the partial landing with POOL's ethereum save built."""
+    data_path, save = str(tmp_path / "data"), str(tmp_path / "save")
+    shutil.copytree(partial, data_path)
+    _open(spark, data_path, save)
+    return data_path, save
+
+
+def test_fresh_save_reopen_runs_three_jobs(spark, saved, count_jobs):
+    """The factory collect plus one toArrow per event table: no schema
+    inference and no rebuild."""
+    data_path, save = saved
+    assert len(count_jobs("reopen-fresh", lambda: _open(spark, data_path, save))) == 3
+
+
+def test_other_chain_append_keeps_save_fresh(spark, upstream, saved, count_jobs):
+    data_path, save = saved
+    before = _fingerprints(save)
+    written = update_tables(
+        spark, LocalParquetConnector(spark, upstream), data_path, "arbitrum",
+        tables=EVENT_TABLES, max_block_cap=CHAINS["arbitrum"][1],
+    )
+    assert written["pool_swap_events"] > 0
+    jobs = count_jobs("reopen-other-chain", lambda: _open(spark, data_path, save))
+    assert len(jobs) == 3
+    assert _fingerprints(save) == before
+
+
+def test_same_chain_append_rebuilds_save(spark, upstream, saved):
+    data_path, save = saved
+    newest = _upstream_rows()["pool_swap_events"][1000]  # POOL's last swap, at CAP
+    assert newest["address"] == POOL and newest["block_number"] == CAP
+    assert _open(spark, data_path, save).get_price_at(CAP + 1) != int(newest["sqrtPriceX96"])
+    before = _fingerprints(save)
+
+    written = update_tables(
+        spark, LocalParquetConnector(spark, upstream), data_path, "ethereum",
+        tables=EVENT_TABLES, max_block_cap=CAP,
+    )
+    pool = _open(spark, data_path, save)
+    assert pool.get_price_at(CAP + 1) == int(newest["sqrtPriceX96"])
+    # only the table that gained files is rebuilt
+    assert written == {"pool_swap_events": 1, "pool_mint_burn_events": 0}
+    after = _fingerprints(save)
+    assert after["pool_swap_events"][0] != before["pool_swap_events"][0]
+    assert after["pool_mint_burn_events"] == before["pool_mint_burn_events"]

@@ -212,18 +212,7 @@ def test_swap_in_matches_quote_ladder_bit_exact(pool, spark):
     assert branches == {"A", "B", "insufficient"}
 
 
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_no_spark_job_after_open(spark, data):
+def test_no_spark_job_after_open(spark, data, count_jobs):
     from v3_polars_spark.v3 import Pool
 
     pool = Pool(spark, POOL, "ethereum", data)
@@ -236,11 +225,9 @@ def test_no_spark_job_after_open(spark, data):
             pool.swap_in({"as_of": x, "tokenIn": TOKEN0, "swapIn": 1e15})
             pool.swap_in({"as_of": x, "tokenIn": TOKEN1, "swapIn": 5e18})
 
-    assert _jobs_in_group(spark, "pool-snapshot-scalar", scalar_calls) == []
+    assert count_jobs("pool-snapshot-scalar", scalar_calls) == []
     # the counter does see jobs: a Spark-side call in its own group
-    assert _jobs_in_group(
-        spark, "pool-snapshot-spark", lambda: pool.create_liq(109.0).collect()
-    )
+    assert count_jobs("pool-snapshot-spark", lambda: pool.create_liq(109.0).collect())
 
 
 def test_pull_false_defers_snapshot(spark, data):

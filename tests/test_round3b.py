@@ -398,6 +398,16 @@ def test_dq_checks_all_pass_and_null_key_semantics(spark):
     assert report == {"unique:id": True, "referential:fk": True}
 
 
+def test_dq_check_compares_by_identity(spark):
+    """Comparing Checks never asks a Column for its truth value."""
+    from v3_polars_spark.ops import check_not_null
+
+    t = spark.createDataFrame([(1, "A")], ["id", "status"])
+    a, b = check_not_null(t, "status"), check_not_null(t, "status")
+    assert a == a and a != b
+    assert b in [a, b] and len({a, b}) == 2
+
+
 # ---------------------------------------------------------------------------
 # keep-best near-dedup and best-match fuzzy resolution
 # ---------------------------------------------------------------------------

@@ -41,11 +41,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-@dataclass
+@dataclass(eq=False)
 class Check:
     """One validation rule: either a fusable single-table aggregate
     (``df`` + the two aggregate columns) or a prebuilt one-row report
-    ``frame`` (two-table rules like referential integrity)."""
+    ``frame`` (two-table rules like referential integrity).
+
+    Checks compare by identity (``eq=False``): a generated ``__eq__``
+    would compare the Column fields, and ``Column.__eq__`` builds an
+    expression whose truth value raises. API change: ``==`` between two
+    Checks is identity (it used to raise), and a Check is hashable."""
 
     rule: str
     df: DataFrame | None = None

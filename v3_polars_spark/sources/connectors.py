@@ -21,6 +21,8 @@ from typing import Protocol
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tables as T
+
 
 class Connector(Protocol):
     """The three-probe contract every remote source implements."""
@@ -54,8 +56,7 @@ class LocalParquetConnector:
         self.root = root
 
     def _scan(self, chain: str, table: str) -> DataFrame:
-        df = self.spark.read.parquet(f"{self.root}/{table}")
-        return df.filter(F.col("chain_name") == chain)
+        return T.tenant_filter(T.read_table(self.spark, self.root, table), chain)
 
     def min_max_block(self, chain: str, table: str):
         row = self._scan(chain, table).agg(

@@ -31,15 +31,10 @@ def max_landed_block(
 ) -> int | None:
     """Resume point: max block_number already landed for this chain
     (reference data_update.py:162-189)."""
-    path = os.path.join(data_path, table)
-    if not os.path.isdir(path):
-        return None
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
+    if not os.path.isdir(os.path.join(data_path, table)):
         return None
     row = (
-        df.filter(F.col("chain_name") == chain)
+        T.tenant_filter(T.read_table(spark, data_path, table), chain)
         .agg(F.max("block_number").alias("hi"))
         .first()
     )

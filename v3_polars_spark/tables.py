@@ -102,30 +102,23 @@ SCHEMAS: dict[str, StructType] = {
 }
 
 
-def read_table(
-    spark: SparkSession,
-    data_path: str,
-    table: str,
-    enforce_schema: bool = False,
-) -> DataFrame:
+def read_table(spark: SparkSession, data_path: str, table: str) -> DataFrame:
     """Read an event table from its parquet directory (S1).
 
     The reference globs ``{data_path}/{table}/*.parquet``; a Spark directory
     read is the same implicit UNION ALL of segments, plus partition
-    discovery if the layout is hive-partitioned. ``enforce_schema=False``
-    (default) trusts parquet footers but re-orders/prunes to the registry
-    columns when they all exist — robust to both the reference's example
-    layout and our partitioned sink.
+    discovery if the layout is hive-partitioned (``chain_name=<chain>``).
+
+    The registry is the read contract: the files are read with
+    ``SCHEMAS[table]`` and come back in its column order, whether
+    ``chain_name`` is a file column (the reference's flat layout) or a
+    partition directory (our sink). Spark therefore runs no job to infer
+    the schema from parquet footers, and every file is read as the
+    registry types (a column the parquet reader cannot convert fails the
+    scan). A missing directory raises ``PATH_NOT_FOUND``.
     """
-    path = os.path.join(data_path, table)
-    if enforce_schema:
-        return spark.read.schema(SCHEMAS[table]).parquet(path)
-    df = spark.read.parquet(path)
-    want = [f.name for f in SCHEMAS[table].fields]
-    have = set(df.columns)
-    if all(c in have for c in want):
-        df = df.select(*want)
-    return df
+    schema = SCHEMAS[table]
+    return spark.read.schema(schema).parquet(os.path.join(data_path, table)).to(schema)
 
 
 def tenant_filter(df: DataFrame, chain: str, address: str | None = None) -> DataFrame:
@@ -173,7 +166,16 @@ def write_segment(df: DataFrame, data_path: str, table: str) -> None:
     the directory an ordered manifest; Spark's committed part-files plus the
     ``chain_name`` partition column carry the same information, and readers
     never depend on file order (every ordered op takes explicit sort keys).
+
+    Frames of registered tables are conformed to ``SCHEMAS[table]``
+    (columns selected by name, then up-cast by ``DataFrame.to``; no Spark
+    job), so what lands reads back under the registry. A frame missing a
+    declared column, or with a type that does not up-cast, raises
+    ``AnalysisException`` before any file is written.
     """
+    if table in SCHEMAS:
+        # the select keeps ``to`` from filling a missing column with NULLs
+        df = df.select(*SCHEMAS[table].fieldNames()).to(SCHEMAS[table])
     (
         df.write.mode("append")
         .partitionBy("chain_name")

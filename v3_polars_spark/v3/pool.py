@@ -156,9 +156,10 @@ class Pool:
         Staleness: unlike the reference's per-session in-memory cache
         (which can never outlive its data), a persisted frame CAN go
         stale when new events land in the raw tables. Each save carries
-        a fingerprint of the source directory's file listing
-        (fsutil.dir_fingerprint — names/sizes/mtimes, no data scan);
-        a later init whose raw listing differs rebuilds automatically.
+        a fingerprint of its chain partition's file listing
+        (fsutil.dir_fingerprint — names/sizes/mtimes, no data scan); a
+        later init whose listing differs rebuilds, and appends to other
+        chains do not make it stale.
         ``refresh=True`` forces a rebuild regardless. All marker/
         fingerprint IO goes through the Hadoop FS API, so remote
         (hdfs://, s3a://) save_paths behave the same as local ones."""
@@ -198,10 +199,11 @@ class Pool:
         tenant-FILTERED, so a table-only key would silently serve one
         pool's events as another's when two Pools share a save_path.
 
-        Currency check: the save carries ``_RAW_FINGERPRINT`` (a listing
-        fingerprint of the SOURCE table directory). If the raw table
-        gained/changed files since the save, the cache rebuilds instead
-        of silently serving pre-append state forever. Spark's file index
+        Currency check: the save carries ``_RAW_FINGERPRINT``, a listing
+        fingerprint of the SOURCE table's ``chain_name=<chain>`` partition
+        (of the whole directory for a flat layout). If it gained/changed
+        files since the save, the cache rebuilds instead of silently
+        serving pre-append state forever. Spark's file index
         ignores underscore-prefixed files, so the extra marker never
         pollutes the parquet read."""
         import posixpath
@@ -212,13 +214,16 @@ class Pool:
             return build()
         loc = posixpath.join(self.save_path, self.chain, self.pool, table)
         raw_dir = posixpath.join(self.data_path, table)
-        current = fsutil.dir_fingerprint(self.spark, raw_dir)
+        part_dir = posixpath.join(raw_dir, f"chain_name={self.chain}")
+        src = part_dir if fsutil.exists(self.spark, part_dir) else raw_dir
+        current = fsutil.dir_fingerprint(self.spark, src)
         saved = fsutil.read_text(self.spark, posixpath.join(loc, "_RAW_FINGERPRINT"))
         fresh = (
             not self.refresh
             and saved == current
             and fsutil.exists(self.spark, posixpath.join(loc, "_SUCCESS"))
         )
+        built = build()
         if not fresh:
             # Drop session-level caches for both paths: the raw dir's
             # file-status listing may predate the append that made the
@@ -227,7 +232,7 @@ class Pool:
             # (CacheManager matches by plan, i.e. by path).
             self.spark.catalog.refreshByPath(raw_dir)
             self.spark.catalog.refreshByPath(loc)
-            build().write.mode("overwrite").parquet(loc)
+            built.write.mode("overwrite").parquet(loc)
             # Atomic marker: a rebuild that dies between the overwrite
             # and the marker leaves no/old fingerprint -> reads stale ->
             # rebuilt next init. save_path still assumes one writer at a
@@ -237,7 +242,9 @@ class Pool:
                 self.spark, posixpath.join(loc, "_RAW_FINGERPRINT"), current
             )
             self.spark.catalog.refreshByPath(loc)
-        return self.spark.read.parquet(loc)
+        # the built frame's schema comes from the registry: reading the save
+        # back with it runs no schema-inference job
+        return self.spark.read.schema(built.schema).parquet(loc)
 
     def _build(self, table: str) -> DataFrame:
         """The tenant-filtered, as_of-keyed frame of one event table."""
