@@ -11,6 +11,7 @@ examples up to the 1000th mainnet swap: 1001 swaps, the last one at
 import datetime
 import os
 import shutil
+import warnings
 
 import pytest
 from pyspark.errors import AnalysisException
@@ -24,6 +25,7 @@ from v3_polars_spark.sources import (
     update_table,
     update_tables,
 )
+from v3_polars_spark.sources.ingest import OVM1_CHAIN, ovm1_replayed
 
 POOL = "0x1d42064fc4beb5f8aaf85f4617ae8b3b5b8bd801"
 OTHER = "0x" + "cd" * 20
@@ -381,3 +383,148 @@ def test_same_chain_append_rebuilds_save(spark, upstream, saved):
     after = _fingerprints(save)
     assert after["pool_swap_events"][0] != before["pool_swap_events"][0]
     assert after["pool_mint_burn_events"] == before["pool_mint_burn_events"]
+
+
+# -- gap segments, the OVM1 replay and the concurrency contract -------------
+
+
+def _part_files(part_dir):
+    if not os.path.isdir(part_dir):
+        return []
+    return sorted(f for f in os.listdir(part_dir) if f.startswith("part-"))
+
+
+class _GapConnector(LocalParquetConnector):
+    """Estimates the second horizon 2 blocks past its start: the previous
+    segment ended on an event block and the next event is ~7 blocks later,
+    so that segment is a block-range gap. Records the landed part files
+    at every horizon call."""
+
+    def __init__(self, spark, root, part_dir):
+        super().__init__(spark, root)
+        self.part_dir = part_dir
+        self.listings = []
+
+    def segment_horizon(self, chain, table, min_block, tgt_max_rows):
+        self.listings.append(_part_files(self.part_dir))
+        if len(self.listings) == 2:
+            return min_block + 2
+        return super().segment_horizon(chain, table, min_block, tgt_max_rows)
+
+
+def test_gap_segment_is_not_a_segment(spark, upstream, tmp_path):
+    data_path, table = str(tmp_path / "landed"), "pool_swap_events"
+    conn = _GapConnector(spark, upstream, os.path.join(data_path, table, "chain_name=ethereum"))
+    n = update_table(
+        spark, conn, data_path, table, "ethereum", tgt_max_rows=300, max_block_cap=CAP
+    )
+    # one horizon call per landed segment plus the gap
+    assert n == len(conn.listings) - 1 == 4
+    # the gap wrote no file, and every call after it landed one
+    first, before_gap, after_gap, *rest = conn.listings
+    assert before_gap == after_gap and len(after_gap) > len(first)
+    assert all(len(b) > len(a) for a, b in zip([after_gap] + rest, rest))
+    # the rows after the gap still land
+    got = T.tenant_filter(T.read_table(spark, data_path, table), "ethereum")
+    want = T.tenant_filter(T.read_table(spark, upstream, table), "ethereum")
+    assert got.count() == want.count() == 1001
+    assert max_landed_block(spark, data_path, table, "ethereum") == CAP
+
+
+def _ovm_rows(chain, blocks, address):
+    table = "pool_swap_events"
+    return [
+        {**{f.name: None for f in T.SCHEMAS[table].fields},
+         "chain_name": chain, "address": address, "block_number": b,
+         "block_timestamp": T0, "transaction_index": 0, "log_index": i,
+         "transaction_hash": f"0x{chain[:3]}{i:04x}", "tick": "0", "sqrtPriceX96": "1"}
+        for i, b in enumerate(blocks)
+    ]
+
+
+@pytest.fixture(scope="module")
+def ovm_upstream(spark, tmp_path_factory):
+    """Live optimism swaps at blocks 1000-1004 and three legacy OVM1 swaps."""
+    root = str(tmp_path_factory.mktemp("ovm_upstream"))
+    rows = _ovm_rows("optimism", range(1000, 1005), POOL) + _ovm_rows(
+        OVM1_CHAIN, [50, 51, 52], "0xold"
+    )
+    spark.createDataFrame(rows, T.SCHEMAS["pool_swap_events"]).write.partitionBy(
+        "chain_name"
+    ).parquet(os.path.join(root, "pool_swap_events"))
+    return root
+
+
+def test_ovm1_replay_lands_once(spark, ovm_upstream, tmp_path):
+    data_path, table = str(tmp_path / "landed"), "pool_swap_events"
+    conn = LocalParquetConnector(spark, ovm_upstream)
+    mapping = spark.createDataFrame([("0xold", POOL)], ["oldaddress", "newaddress"])
+    assert not ovm1_replayed(spark, data_path, table)  # no table yet
+    first = update_tables(spark, conn, data_path, "optimism", [table], ovm1_mapping=mapping)
+    assert first == {table: 2}  # the live segment and the replay
+    assert ovm1_replayed(spark, data_path, table)
+    again = update_tables(spark, conn, data_path, "optimism", [table], ovm1_mapping=mapping)
+    assert again == {table: 0}
+    landed = T.tenant_filter(T.read_table(spark, data_path, table), "optimism", POOL)
+    assert landed.filter(F.col("block_number") == 1).count() == 3
+    assert landed.count() == 8
+
+
+def test_ovm1_replayed_raises_on_unreadable_table(spark, tmp_path):
+    """A read failure other than a missing directory is not "not replayed"."""
+    part_dir = tmp_path / "pool_swap_events" / "chain_name=optimism"
+    part_dir.mkdir(parents=True)
+    (part_dir / "part-00000-corrupt.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="(?i)parquet") as err:
+        ovm1_replayed(spark, str(tmp_path), "pool_swap_events")
+    assert "PATH_NOT_FOUND" not in str(err.value)
+
+
+class _FailingConnector(LocalParquetConnector):
+    def min_max_block(self, chain, table):
+        if table == "pool_mint_burn_events":
+            raise RuntimeError("upstream probe failed")
+        return super().min_max_block(chain, table)
+
+
+def test_update_tables_raises_a_table_failure(spark, upstream, tmp_path):
+    with pytest.raises(RuntimeError, match="upstream probe failed"):
+        update_tables(
+            spark, _FailingConnector(spark, upstream), str(tmp_path), "ethereum",
+            tables=EVENT_TABLES, max_block_cap=ETH_MID,
+        )
+
+
+def _jobs_in_group(spark, count_jobs, group, fn):
+    """(the jobs ``fn`` ran in ``group``, every job started while it ran)."""
+    def marker():
+        return spark.range(1).collect()
+
+    before = max(count_jobs(group + "-before", marker))
+    jobs = count_jobs(group, fn)
+    after = min(count_jobs(group + "-after", marker))
+    return sorted(jobs), list(range(before + 1, after))
+
+
+def test_concurrent_jobs_stay_in_the_caller_job_group(spark, upstream, tmp_path, count_jobs):
+    data_path, save = str(tmp_path / "data"), str(tmp_path / "save")
+    conn = LocalParquetConnector(spark, upstream)
+    jobs, started = _jobs_in_group(
+        spark, count_jobs, "append",
+        lambda: update_tables(spark, conn, data_path, "ethereum", max_block_cap=ETH_MID),
+    )
+    assert jobs and jobs == started
+    jobs, started = _jobs_in_group(
+        spark, count_jobs, "open", lambda: _open(spark, data_path, save)
+    )
+    assert jobs and jobs == started
+
+
+def test_pool_open_emits_no_user_warning(spark, partial):
+    from v3_polars_spark.v3 import Pool
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        Pool(spark, POOL, "ethereum", partial).get_price_at(ETH_MID)
+        Pool(spark, POOL, "ethereum", partial, pull=False).get_price_at(ETH_MID)
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]

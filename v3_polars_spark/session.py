@@ -15,8 +15,10 @@ code is correct and fast on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -106,6 +108,16 @@ def get_spark(
     elif not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")
     return builder.getOrCreate()
+
+
+def run_concurrently(spark: SparkSession, *thunks):
+    """Run independent driver-side thunks on one thread each; return their
+    results in order (the first failure re-raises after all finish). Each
+    runs under ``inheritable_thread_target(spark)``, so its Spark jobs keep
+    the caller's job group, local properties and tags."""
+    with ThreadPoolExecutor(len(thunks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(f)) for f in thunks]
+        return [f.result() for f in futures]
 
 
 def tune_shuffle_partitions(

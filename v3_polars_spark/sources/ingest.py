@@ -13,13 +13,16 @@ streaming re-expression (streaming/ingest_stream.py).
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import tables as T
 from ..ops import recode_join
+from ..session import run_concurrently
 from .connectors import Connector
 
 OVM1_CHAIN = "optimism_legacy_ovm1"
@@ -55,14 +58,18 @@ def update_table(
     Loop invariant (reference data_update.py:191-292): each iteration lands
     blocks [resume, horizon] where horizon accumulates ~tgt_max_rows rows,
     then advances resume to horizon+1. Restart-safe: resume is re-derived
-    from the landed data."""
-    lo, hi = connector.min_max_block(chain, table)
+    from the landed data. The bounds and resume probes run concurrently;
+    a segment's rows are counted by ``observe`` on its write."""
+    (lo, hi), landed = run_concurrently(
+        spark,
+        lambda: connector.min_max_block(chain, table),
+        lambda: max_landed_block(spark, data_path, table, chain),
+    )
     if lo is None:
         return 0
     if max_block_cap is not None:
         hi = min(hi, max_block_cap)
 
-    landed = max_landed_block(spark, data_path, table, chain)
     resume = lo if landed is None else landed + 1
     n_segments = 0
     while resume <= hi:
@@ -71,15 +78,14 @@ def update_table(
             break
         horizon = min(horizon, hi)
         seg = connector.read_segment(spark, chain, table, resume, horizon)
-        if seg.isEmpty():
-            # a block-range gap (possible when segment_horizon is an
-            # estimate, as with remote connectors): skip past it and keep
-            # going, matching the reference loop which advances min_block
-            # over empty ranges (data_update.py)
-            resume = horizon + 1
-            continue
-        T.write_segment(seg, data_path, table)
-        n_segments += 1
+        rows = Observation()
+        T.write_segment(seg.observe(rows, F.count(F.lit(1)).alias("n")), data_path, table)
+        # 0 rows: a block-range gap (segment_horizon may be an estimate,
+        # as with remote connectors) that landed no file; it is not a
+        # segment, and resume moves past it like the reference loop
+        # advances min_block over empty ranges (data_update.py)
+        if rows.get["n"]:
+            n_segments += 1
         resume = horizon + 1
     return n_segments
 
@@ -110,6 +116,21 @@ def ovm1_rewrite(df: DataFrame, mapping_df: DataFrame) -> DataFrame:
     return out
 
 
+def ovm1_replayed(spark: SparkSession, data_path: str, table: str) -> bool:
+    """Whether ``table`` holds rewritten legacy rows (the synthetic
+    block_number=1 never occurs live). Only a missing directory means no;
+    other read errors raise, as a wrong no doubles legacy liquidity."""
+    try:
+        landed = T.read_table(spark, data_path, table)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return False
+    return not landed.filter(
+        (F.col("chain_name") == "optimism") & (F.col("block_number") == 1)
+    ).isEmpty()
+
+
 def update_tables(
     spark: SparkSession,
     connector: Connector,
@@ -120,30 +141,22 @@ def update_tables(
     max_block_cap: int | None = None,
     ovm1_mapping: DataFrame | None = None,
 ) -> dict[str, int]:
-    """Update all four event tables; for chain='optimism', also replay the
-    legacy OVM1 chain and append its rewritten rows (reference
-    state.py:75-86 + data_update.py:236-280)."""
+    """Update the event tables (all four by default) with one concurrent
+    ``update_table`` each (separate upstream tables and directories);
+    segments written per table, in ``tables`` order. For chain='optimism',
+    then replay the legacy OVM1 chain and append its rewritten rows once
+    (reference state.py:75-86 + data_update.py:236-280)."""
     tables = tables or T.TABLES
-    written = {}
-    for table in tables:
-        written[table] = update_table(
-            spark, connector, data_path, table, chain, tgt_max_rows, max_block_cap
+    counts = run_concurrently(spark, *(
+        functools.partial(
+            update_table, spark, connector, data_path, t, chain, tgt_max_rows, max_block_cap
         )
+        for t in tables
+    ))
+    written = dict(zip(tables, counts))
     if chain == "optimism" and ovm1_mapping is not None:
         for table in tables:
-            # idempotence: rewritten legacy rows all land at the synthetic
-            # block_number=1, which never occurs for live optimism data —
-            # if any such rows are already on disk, the replay has run
-            # (re-appending would double every legacy pool's liquidity)
-            try:
-                landed = T.read_table(spark, data_path, table)
-                already = not landed.filter(
-                    (F.col("chain_name") == "optimism")
-                    & (F.col("block_number") == 1)
-                ).isEmpty()
-            except Exception:
-                already = False
-            if already:
+            if ovm1_replayed(spark, data_path, table):
                 continue
             lo, hi = connector.min_max_block(OVM1_CHAIN, table)
             if lo is None:

@@ -4,10 +4,10 @@
 Like the reference, the scalar API (``get_tick_at``, ``get_price_at``,
 ``calc_swap_df``, ``swap_in``) is served from a per-pool driver snapshot
 of the pool's events: one Arrow collect of the tenant-filtered swaps and
-one of the mint/burns, taken when the Pool opens (or on the first scalar
-call with ``pull=False``). After that, as-of lookups and swap quotes run
-no Spark job. Driver memory is bounded by one pool's events; the
-multi-pool composites (``liquidity_distribution_multi``,
+one of the mint/burns, taken concurrently when the Pool opens (or on
+the first scalar call with ``pull=False``). After that, as-of lookups
+and swap quotes run no Spark job. Driver memory is bounded by one
+pool's events; the multi-pool composites (``liquidity_distribution_multi``,
 ``quote_ladder_multi``, ``liquidity_timeline``) are the scale path.
 
 Other design points:
@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from .. import tables as T
 from ..ops import asof_lookup_scalar
+from ..session import run_concurrently
 from . import swap_math as sm
 from .liquidity import liquidity_distribution
 from .series import bn_at_date as _bn_at_date
@@ -145,6 +146,8 @@ class Pool:
         ``max_supported``); ``pull=False`` defers it to the first scalar
         call. The snapshot is never refreshed: re-open the Pool to see
         events that landed after it was taken.
+        The factory collect and the snapshot's two collects run
+        concurrently (a pool missing from the factory raises after them).
 
         ``save_path`` is the cross-session analog of the reference's
         ``readFromMemoryOrDisk(save=True)`` (state.py:114-174): the
@@ -171,25 +174,31 @@ class Pool:
         self.refresh = refresh
         self._cache: dict = {"as_of": None}
 
-        # initializePoolFromFactory (reference pool_helpers.py:10-34)
+        self._sources: dict[str, DataFrame] = {}
+        self._swaps: DataFrame | None = None
+        self._mb: DataFrame | None = None
+        self._snap: _Snapshot | None = None
+        self.max_supported = -1
+
+        # initializePoolFromFactory (reference pool_helpers.py:10-34), run
+        # concurrently with the snapshot collects
         factory = T.tenant_filter(
             T.read_table(spark, data_path, "factory_pool_created"), chain
         ).filter(F.col("pool") == self.pool)
-        rows = factory.select("tickSpacing", "fee", "token0", "token1").collect()
+        rows, *events = run_concurrently(
+            spark,
+            factory.select("tickSpacing", "fee", "token0", "token1").collect,
+            *(self._event_collects() if pull else []),
+        )
         assert len(rows) != 0, "Pool missing from factory"
         assert len(rows) == 1, "Multiple pools at that address"
         self.ts = int(rows[0]["tickSpacing"])
         self.fee = int(rows[0]["fee"])
         self.token0 = rows[0]["token0"]
         self.token1 = rows[0]["token1"]
-
-        self._sources: dict[str, DataFrame] = {}
-        self._swaps: DataFrame | None = None
-        self._mb: DataFrame | None = None
-        self._snap: _Snapshot | None = None
-        self.max_supported = -1
         if pull:
-            self.max_supported = self.snapshot.max_supported
+            self._snap = _Snapshot(*events)
+            self.max_supported = self._snap.max_supported
 
     # readFromMemoryOrDisk analogs (reference state.py:114-174) ------------
     def _saved_or(self, table: str, build) -> DataFrame:
@@ -281,14 +290,18 @@ class Pool:
             self._mb = self._source("pool_mint_burn_events").cache()
         return self._mb
 
+    def _event_collects(self) -> list:
+        """The snapshot's swap and mint/burn collects, as thunks."""
+        return [
+            lambda: self._source("pool_swap_events").select(*_SWAP_COLS).toArrow(),
+            lambda: self._source("pool_mint_burn_events").select(*_MB_COLS).toArrow(),
+        ]
+
     @property
     def snapshot(self) -> _Snapshot:
         """The driver snapshot the scalar API reads, taken on first use."""
         if self._snap is None:
-            self._snap = _Snapshot(
-                self._source("pool_swap_events").select(*_SWAP_COLS).toArrow(),
-                self._source("pool_mint_burn_events").select(*_MB_COLS).toArrow(),
-            )
+            self._snap = _Snapshot(*run_concurrently(self.spark, *self._event_collects()))
         return self._snap
 
     # point-in-time getters (reference state.py:197-244) ------------------
