@@ -304,10 +304,12 @@ def expand_pairs(
     within_ok: pd.Series | None = None,
     within_map: dict | None = None,
 ) -> pd.DataFrame:
-    """Pandas mirror of the engine's _expand_collapsed_pairs: cross-group
+    """Pandas mirror of the engine's _expand_collapsed_pairs (which reads
+    the members from the _exact_groups ``__ids`` arrays): cross-group
     pairs inherit the rep pair's value; within-group pairs get
-    ``within_value`` (or per-rep ``within_map``), optionally gated by the
-    ``within_ok`` row mask over ``members``."""
+    ``within_value`` (or per-rep ``within_map``, the engine's computed
+    per-group ``within`` after its ``keep`` predicate), optionally gated
+    by the ``within_ok`` row mask over ``members``."""
     m = members[["doc_id", "rep"]]
     cross = (
         rep_pairs.rename(columns={"id_a": "__ra", "id_b": "__rb"})

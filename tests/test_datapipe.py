@@ -149,6 +149,125 @@ def test_ngram_jaccard_collapse_equivalence(docs, spark):
     assert {(0, 1), (0, 7), (1, 7)} <= {(a, b) for a, b, j in fast if j == 1.0}
 
 
+def test_collapse_equivalence_when_threshold_rejects_self_pairs(
+    docs, spark, sf_dir
+):
+    """Thresholds that reject identical inputs drop the within-group pairs
+    on the collapsed path exactly as the uncollapsed path never emits
+    them: jaccard above 1.0, a negative hamming bound, and a cosine
+    threshold of 1.0 that the computed self-cosine meets or misses by
+    its last ulp."""
+    d = docs.unionByName(
+        spark.createDataFrame([(7, BASE)], ["doc_id", "text"])
+    )
+    sig = simhash(d)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(100)
+    first = emb.first()
+    emb = emb.unionByName(
+        spark.createDataFrame(
+            [(90001, first["embedding"], 0), (90002, first["embedding"], 0)],
+            emb.schema,
+        )
+    )
+    cases = [
+        (minhash_lsh_pairs, d, dict(verify_threshold=1.01), "jaccard"),
+        (ngram_jaccard_pairs, d, dict(threshold=1.01), "jaccard"),
+        (hamming_near_pairs, sig, dict(max_hamming=-1), "hamming"),
+        (embedding_near_dup_lsh, emb, dict(dim=64, threshold=1.0), "cosine"),
+    ]
+    for op, frame, kw, value in cases:
+        fast, slow = (
+            sorted(
+                (r["id_a"], r["id_b"], r[value])
+                for r in op(frame, **kw, collapse_exact=c).collect()
+            )
+            for c in (True, False)
+        )
+        assert fast == slow, op.__name__
+
+
+def test_hamming_hot_group_expands_every_within_pair(spark):
+    """One 2,000-member exact group (plus a few distinct signatures far
+    from it) expands to all d(d-1)/2 within pairs at hamming 0, each once
+    and ordered — the within-group leg generates them per member row,
+    never as one d(d-1)/2-element array in one row."""
+    hot = spark.range(2000).select(
+        F.col("id").alias("doc_id"), F.lit(0).cast("long").alias("simhash")
+    )
+    far = spark.createDataFrame(
+        [(5000, -1), (5001, 0x00FF00FF00FF00FF), (5002, 0x0F0F0F0F0F0F0F0F)],
+        "doc_id bigint, simhash bigint",
+    )
+    out = hamming_near_pairs(hot.unionByName(far), max_hamming=3)
+    stats = out.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_distinct("id_a", "id_b").alias("distinct"),
+        F.sum((F.col("id_a") >= F.col("id_b")).cast("int")).alias("unordered"),
+        F.max("hamming").alias("max_h"),
+        F.max("id_b").alias("max_id"),
+    ).first()
+    assert stats["n"] == 1_999_000
+    assert stats["distinct"] == 1_999_000
+    assert stats["unordered"] == 0
+    assert stats["max_h"] == 0
+    assert stats["max_id"] < 2000  # the far signatures pair with nothing
+
+
+def test_minhash_degenerate_bucket_uncollapsed(spark):
+    """1,000 copies of one text with the collapse off: every band is one
+    1,000-id bucket, and the bucket expansion emits all 499,500 pairs,
+    each verified at Jaccard 1.0."""
+    d = spark.range(1000).select(
+        F.col("id").alias("doc_id"), F.lit(BASE).alias("text")
+    )
+    out = minhash_lsh_pairs(d, verify_threshold=0.5, collapse_exact=False)
+    stats = out.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_distinct("id_a", "id_b").alias("distinct"),
+        F.sum((F.col("id_a") >= F.col("id_b")).cast("int")).alias("unordered"),
+        F.min("jaccard").alias("lo"),
+        F.max("jaccard").alias("hi"),
+    ).first()
+    assert stats["n"] == stats["distinct"] == 499_500
+    assert stats["unordered"] == 0
+    assert stats["lo"] == stats["hi"] == 1.0
+
+
+def test_pair_operators_build_no_pair_array(docs, spark, sf_dir):
+    """No pair operator builds a whole group's or bucket's pair list as
+    one array value (``flatten``), on the collapsed or uncollapsed path:
+    a single row can neither spill nor hold more than ~2^31 elements."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50)
+    sig = simhash(docs)
+    for collapse in (True, False):
+        built = [
+            minhash_lsh_pairs(docs, collapse_exact=collapse),
+            ngram_jaccard_pairs(docs, collapse_exact=collapse),
+            hamming_near_pairs(sig, collapse_exact=collapse),
+            embedding_near_dup_lsh(emb, dim=64, collapse_exact=collapse),
+        ]
+        for df in built:
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "flatten(" not in plan, (collapse, plan)
+
+
+@pytest.mark.parametrize("num_hashes,bands", [(16, 3), (16, 32), (16, 0)])
+def test_lsh_band_count_must_divide_hashes(docs, num_hashes, bands):
+    """A band count that does not divide the hash count (or is < 1) is a
+    ValueError naming both, raised while the plan is built: 16 hashes in
+    3 bands would drop h15, and 32 bands would bucket every band on h0."""
+    from v3_polars_spark.datapipe import dedup_against_near
+
+    msg = f"bands={bands} .*num_hashes={num_hashes}"
+    for collapse in (True, False):
+        with pytest.raises(ValueError, match=msg):
+            minhash_lsh_pairs(
+                docs, num_hashes=num_hashes, bands=bands, collapse_exact=collapse
+            )
+    with pytest.raises(ValueError, match=msg):
+        dedup_against_near(docs, docs, num_hashes=num_hashes, bands=bands)
+
+
 def test_simhash_near_pairs(docs, spark):
     sig = simhash(docs)
     vals = {r["doc_id"]: r["simhash"] for r in sig.collect()}

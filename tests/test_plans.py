@@ -514,3 +514,36 @@ def test_explode_does_not_reinline_array_expr(spark, sf_dir):
         .toString()
     )
     assert plan.count("md5(") == 1, f"md5 inlined {plan.count('md5(')}x"
+
+
+def test_topk_is_one_take_ordered_off_the_cache(spark, sf_dir):
+    """topk's recorded floor: the executed plan above the orders cache is
+    exactly TakeOrderedAndProject(limit=10) over a shuffle-free Coalesce
+    over the InMemoryTableScan — no Exchange and no Sort at query time
+    (the cache's own population repartition is paid once)."""
+    import __spark_entry__ as em
+    from v3_polars_spark.plans import count_exchanges_split
+
+    df = em.queries()["topk"](spark, sf_dir)
+    assert count_exchanges_split(df)["query"] == 0
+
+    wrappers = ("AdaptiveSparkPlan", "ResultQueryStage", "TableCacheQueryStage")
+
+    def above_cache(node, acc):
+        cls = node.getClass().getName()
+        if not node.nodeName().startswith(wrappers):
+            acc.append(node)
+        if "InMemoryTableScanExec" in cls:
+            return acc  # the cached plan below is the one-time build
+        if "AdaptiveSparkPlanExec" in cls:
+            return above_cache(node.executedPlan(), acc)
+        if "QueryStageExec" in cls:
+            return above_cache(node.plan(), acc)
+        for i in range(node.children().size()):
+            above_cache(node.children().apply(i), acc)
+        return acc
+
+    nodes = above_cache(df._jdf.queryExecution().executedPlan(), [])
+    names = [n.nodeName() for n in nodes]
+    assert names == ["TakeOrderedAndProject", "Coalesce", "InMemoryTableScan"], names
+    assert nodes[0].limit() == 10

@@ -218,22 +218,7 @@ def ngram_jaccard_pairs(
         per_doc = sh.groupBy(id_col).agg(
             F.md5(F.to_json(F.sort_array(F.collect_set("shingle")))).alias("__gk")
         )
-        # one groupBy aggregation derives the whole collapse state (rep +
-        # member array) — same formulation as _minhash_collapse_graph:
-        # map-side partials on 16-byte keys, no window sort, and the one
-        # persisted frame holds one row per DISTINCT set (coalesced like
-        # every post-collapse cache). The exploded shingle stream still
-        # needs the semi-join filter to build the representative shingle
-        # rows.
-        groups = _track(
-            per_doc.groupBy("__gk")
-            .agg(
-                F.min(id_col).alias("__rep"),
-                F.collect_list(F.col(id_col)).alias("__ids"),
-            )
-            .coalesce(_collapse_parts(per_doc))
-        )
-        members = groups.select(F.explode("__ids").alias(id_col), F.col("__rep"))
+        groups = _exact_groups(per_doc, "__gk", id_col)
         # reps persisted: _ngram_jaccard_core consumes it three times
         # (sizes + both join sides), and each consumer would otherwise
         # re-run the semi-join over the full exploded-shingle cache
@@ -246,7 +231,8 @@ def ngram_jaccard_pairs(
         )
         rep_pairs = _ngram_jaccard_core(reps, id_col, threshold)
         return _expand_collapsed_pairs(
-            rep_pairs, members, id_col, threshold, within_groups=groups
+            rep_pairs, groups, id_col, "jaccard",
+            F.lit(1.0), F.col("jaccard") >= threshold,
         )
     return _ngram_jaccard_core(sh, id_col, threshold)
 
@@ -435,8 +421,6 @@ def minhash_lsh_pairs(
     engine's table-key invariant. Rows sharing an id are a caller error
     (the uncollapsed and collapsed paths diverge on how they merge
     them)."""
-    assert num_hashes % bands == 0
-
     # No size(shset)>0 filter: docs with no shingles yield no exploded
     # rows, hence no signature, no bucket, no candidate — the filter was
     # redundant AND forced CollapseProject to re-inline the shingle
@@ -453,12 +437,13 @@ def minhash_lsh_pairs(
         return _lsh_pairs_from_sets(
             sets, id_col, num_hashes, bands, verify_threshold
         )
-    groups, members, rep_pairs = _minhash_collapse_graph(
+    groups, rep_pairs = _minhash_collapse_graph(
         shingle_hash_sets(df, text_col, id_col, n),
         id_col, num_hashes, bands, verify_threshold,
     )
     return _expand_collapsed_pairs(
-        rep_pairs, members, id_col, verify_threshold, within_groups=groups
+        rep_pairs, groups, id_col, "jaccard",
+        F.lit(1.0), F.col("jaccard") >= verify_threshold,
     )
 
 
@@ -493,43 +478,55 @@ def _collapse_parts(df: DataFrame) -> int:
     return max(floor, parent // 10)
 
 
+def _exact_groups(
+    keyed: DataFrame, key: str, id_col: str, *payload: str
+) -> DataFrame:
+    """The exact-duplicate collapse shared by the four pair operators:
+    one row per distinct ``key`` — ``(key, __rep, __ids, *payload)`` with
+    ``__rep`` = min id (the representative), ``__ids`` = every member id,
+    and ``first(p)`` for each payload column. Persisted (tracked) and
+    coalesced to :func:`_collapse_parts`.
+
+    The key is the content itself or a short hash of it (md5 of a sorted
+    set or of a rendered vector, a signature long), so every row of a
+    group carries the SAME payload value and which member's ``first``
+    survives is unobservable downstream (signatures, buckets, verify,
+    cosine are value functions). One ``groupBy`` derives the whole
+    collapse state: map-side partials merge co-partitioned duplicates
+    before the single exchange, so payload bytes cross once per (group x
+    input partition) instead of once per doc; there is no window sort,
+    and one persisted frame replaces per-doc members/reps persists
+    (under AQE each persisted-frame reference is its own
+    TableCacheQueryStage job, ~30-50 ms each). Members and
+    representatives derive from it by narrow projections, and
+    :func:`_expand_collapsed_pairs` rebuilds the full pair list."""
+    return _track(
+        keyed.groupBy(key)
+        .agg(
+            F.min(id_col).alias("__rep"),
+            F.collect_list(F.col(id_col)).alias("__ids"),
+            *[F.first(p).alias(p) for p in payload],
+        )
+        .coalesce(_collapse_parts(keyed))
+    )
+
+
 def _minhash_collapse_graph(
     sets: DataFrame,
     id_col: str,
     num_hashes: int,
     bands: int,
     verify_threshold: float,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(groups, members, rep_pairs) over a ``(id_col, shset)`` frame.
+) -> tuple[DataFrame, DataFrame]:
+    """(groups, rep_pairs) over a ``(id_col, shset)`` frame: the
+    :func:`_exact_groups` of the shingle sets (key = md5 of the SORTED
+    set, so set equality — not array order — groups) and the LSH pairs
+    of their representatives.
 
-    exact-collapse: one row per distinct shingle set. Group key = md5 of
-    the SORTED set rendered to string (16-byte shuffle keys instead of
-    shuffling the arrays themselves); sort_array makes set-equality, not
-    array-order, the grouping relation. Docs with empty sets produce no
-    signature in the uncollapsed pipeline, hence no pairs — exclude them
-    from groups so within-group expansion cannot invent pairs for them.
-
-    ONE groupBy aggregation derives the whole collapse state — one row
-    per distinct set: ``(rep_id, __ids member list, shset)`` — and is the
-    ONLY persisted frame. ``min(id)`` is the representative, the
-    collect_list is the membership map, and ``first(shset)`` is a valid
-    representative array because every row in a group carries the SAME
-    set (the group key is the sorted rendering): signatures (explode +
-    min), verify (array_intersect / size) and jaccard are set-functions,
-    so WHICH member's array survives is unobservable in the results.
-    Versus the previous window formulation (window over __gk + three
-    persisted frames: the array-bearing window output plus narrow
-    members/reps derivations) this removes two persisted frames and the
-    window sort while keeping the same single exchange — and the
-    exchange now carries map-side PARTIAL aggregates: on a
-    duplication-heavy corpus co-partitioned duplicates collapse before
-    the shuffle, so the array bytes cross once per (group x input
-    partition) instead of once per doc (guide §2.3). Under AQE every
-    persisted-frame reference spawns its own TableCacheQueryStage job
-    (~30-50 ms scheduling floor each, measured); dropping from three
-    tracked frames to one removes that per-consumer parade.
-
-    The empty-set exclusion happens AFTER the persisted aggregate
+    Docs with empty sets produce no signature in the uncollapsed
+    pipeline, hence no pairs; their group (key = md5 of the empty-array
+    rendering) is dropped so within-group expansion cannot invent pairs
+    for them. The exclusion happens AFTER the persisted aggregate
     (``size(shset)`` filter on the cached frame), never as a filter on
     the computed ``shset`` upstream of it: a pre-aggregation
     ``filter(size(shset) > 0)`` is pushed through the shingle
@@ -538,34 +535,20 @@ def _minhash_collapse_graph(
     elimination, the per-token md5 transform then re-runs once per
     shingle index (measured ~90x the stage CPU at sf0.1 when the
     persist that used to act as the pushdown barrier was removed).
-    Filtering the cached frame costs one comparison per distinct row.
-    Empty-set docs form their own group (gk = md5 of the empty-array
-    rendering) and are dropped from both ``members`` and ``reps``, so —
-    exactly as before — they contribute no pairs."""
+    Filtering the cached frame costs one comparison per distinct row."""
     keyed = sets.select(
         F.col(id_col),
         F.col("shset"),
         F.md5(F.sort_array(F.col("shset")).cast("string")).alias("__gk"),
     )
-    parts = _collapse_parts(sets)
-    groups = _track(
-        keyed.groupBy("__gk")
-        .agg(
-            F.min(id_col).alias("__rep"),
-            F.collect_list(F.col(id_col)).alias("__ids"),
-            F.first("shset").alias("shset"),
-        )
-        .coalesce(parts)
+    groups = _exact_groups(keyed, "__gk", id_col, "shset").filter(
+        F.size("shset") > 0
     )
-    nonempty = groups.filter(F.size("shset") > 0)
-    members = nonempty.select(
-        F.explode("__ids").alias(id_col), F.col("__rep")
-    )
-    reps = nonempty.select(F.col("__rep").alias(id_col), F.col("shset"))
+    reps = groups.select(F.col("__rep").alias(id_col), F.col("shset"))
     rep_pairs = _lsh_pairs_from_sets(
         reps, id_col, num_hashes, bands, verify_threshold
     )
-    return nonempty, members, rep_pairs
+    return groups, rep_pairs
 
 
 def near_dup_components(
@@ -601,7 +584,7 @@ def near_dup_components(
     # not persisted: single consumer on the collapsed path (see
     # minhash_lsh_pairs)
     sets = shingle_hash_sets(df, text_col, id_col, n)
-    groups, _, rep_pairs = _minhash_collapse_graph(
+    groups, rep_pairs = _minhash_collapse_graph(
         sets, id_col, num_hashes, bands, verify_threshold
     )
     # groups holds one row per distinct set with __rep and the full
@@ -626,36 +609,23 @@ def near_dup_components(
 
 def _expand_collapsed_pairs(
     rep_pairs: DataFrame,
-    members: DataFrame,
+    groups: DataFrame,
     id_col: str,
-    threshold: float,
-    value_col: str = "jaccard",
-    within_value: Column | None = None,
-    within_keep: bool | None = None,
-    within_values: DataFrame | None = None,
-    within_groups: DataFrame | None = None,
+    value_col: str,
+    within: Column,
+    keep: Column,
 ) -> DataFrame:
-    """Reconstruct the full (id_a, id_b, <value>) list from representative
-    pairs plus the ``(id_col, __rep)`` membership map: cross-group pairs
-    inherit the representatives' value (every member of rep_a's group
-    pairs with every member of rep_b's); within-group pairs are identical
-    inputs — jaccard exactly 1.0 / hamming exactly 0 (``within_value``),
-    kept iff the operator's threshold admits the self-similarity
-    (``within_keep``, default: jaccard semantics ``threshold <= 1.0``).
-    When the self-similarity is a COMPUTED per-group quantity (FP cosine),
-    pass ``within_values`` — a ``(__rep, value_col)`` frame joined onto
-    the within pairs; groups absent from it emit nothing.
-
-    ``within_groups``: a ``(__rep, __ids)`` frame carrying each group's
-    full member-id array (the collapse aggregate already holds it). When
-    given, within-group pairs are expanded IN-TASK from the sorted array
-    (:func:`_pair_arr`) instead of self-joining the membership map on
-    ``__rep`` — one cache read and zero exchanges replace two reads plus
-    a join, and a d-member group emits its d(d-1)/2 pairs from one
-    d-element array row instead of d x d join rows through a hash join
-    (guide §2.4/§2.2 — the skew story strictly improves). Pair set
-    identical: both forms emit every (id_a < id_b) combination of the
-    group's members."""
+    """Reconstruct the full ``(id_a, id_b, value_col)`` list from the
+    representative pairs and the :func:`_exact_groups` frame. Cross-group
+    pairs inherit the representatives' value (every member of rep_a's
+    group pairs with every member of rep_b's). Within-group pairs are
+    pairs of identical inputs: ``within`` is their value, evaluated once
+    per group row with >= 2 members (``lit(1.0)`` jaccard, ``lit(0)``
+    hamming, or a computed self-similarity such as the FP self-cosine —
+    singleton groups never evaluate it, so a lone zero vector never
+    divides), and ``keep`` is the operator's predicate on ``value_col``.
+    Each kept group then expands in-task through :func:`_array_pairs`."""
+    members = groups.select(F.explode("__ids").alias(id_col), F.col("__rep"))
     ma = members.select(F.col("__rep").alias("id_a"), F.col(id_col).alias("__da"))
     mb = members.select(F.col("__rep").alias("id_b"), F.col(id_col).alias("__db"))
     cross = (
@@ -667,32 +637,31 @@ def _expand_collapsed_pairs(
             value_col,
         )
     )
-    if within_groups is not None:
-        within = (
-            within_groups.filter(F.size("__ids") >= 2)
-            .select(
-                "__rep",
-                F.explode(_pair_arr(F.sort_array(F.col("__ids")))).alias("__p"),
-            )
-            .select("__rep", F.col("__p.id_a").alias("id_a"), F.col("__p.id_b").alias("id_b"))
-        )
-    else:
-        wa = members.select("__rep", F.col(id_col).alias("id_a"))
-        wb = members.select("__rep", F.col(id_col).alias("id_b"))
-        within = wa.join(wb, "__rep").filter(F.col("id_a") < F.col("id_b"))
-    if within_values is not None:
-        within = within.join(within_values, "__rep").select(
-            "id_a", "id_b", value_col
-        )
-    else:
-        if within_value is None:
-            within_value = F.lit(1.0)
-        within = within.select("id_a", "id_b", within_value.alias(value_col))
-    if within_keep is None:
-        within_keep = threshold <= 1.0
-    if not within_keep:
-        within = within.filter(F.lit(False))
-    return cross.unionByName(within)
+    dup_groups = (
+        groups.filter(F.size("__ids") >= 2)
+        .select(F.sort_array("__ids").alias("__ids"), within.alias(value_col))
+        .filter(keep)
+    )
+    return cross.unionByName(_array_pairs(dup_groups, value_col))
+
+
+def _array_pairs(df: DataFrame, *carry: str) -> DataFrame:
+    """``(id_a, id_b, *carry)``: every (id_a < id_b) pair of each row's
+    SORTED ``__ids`` array — the in-task pair expansion of
+    :func:`_bucket_pairs` and of the within-group leg of
+    :func:`_expand_collapsed_pairs`. Two nested generators (posexplode
+    the array, then explode the slice after each position) so no value
+    built in a row is larger than the d-element array itself: a single
+    d(d-1)/2-element pair array per row could neither spill nor pass the
+    ~2^31-element array limit."""
+    ids = F.col("__ids")
+    return df.select(
+        *carry, ids, F.posexplode(ids).alias("__i", "id_a")
+    ).select(
+        F.col("id_a"),
+        F.explode(F.slice(ids, F.col("__i") + 2, F.size(ids))).alias("id_b"),
+        *carry,
+    )
 
 
 def _band_buckets(
@@ -715,7 +684,16 @@ def _band_buckets(
     subtree N times; exploding an array of band hashes evaluates it once
     per doc. Each band bucket is the modular polynomial fold of its R
     signature components — pure long arithmetic (no md5-of-concat
-    strings), identical in the oracle."""
+    strings), identical in the oracle.
+
+    ``bands`` must be >= 1 and divide ``num_hashes`` (ValueError
+    otherwise): a remainder would silently drop the trailing signature
+    components, and ``bands > num_hashes`` would bucket every band on
+    ``h0`` alone."""
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must be >= 1 and divide num_hashes={num_hashes}"
+        )
     rows_per_band = num_hashes // bands
     sh = sets.select(F.col(id_col), F.explode(F.col("shset")).alias("shingle"))
     mins = [
@@ -736,21 +714,6 @@ def _band_buckets(
     )
 
 
-def _pair_arr(arr: Column) -> Column:
-    """All (id_a < id_b) pairs of a SORTED id array as an array of structs
-    — the in-task pair expansion shared by :func:`_bucket_pairs` and the
-    within-group leg of :func:`_expand_collapsed_pairs`."""
-    return F.flatten(
-        F.transform(
-            arr,
-            lambda x, i: F.transform(
-                F.slice(arr, i + F.lit(2), F.size(arr)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-
-
 def _bucket_pairs(buckets: DataFrame, id_col: str, keys: list[str]) -> DataFrame:
     """Distinct ordered candidate pairs from a ``(*keys, id_col)`` bucket
     stream: group the ids per bucket and emit every in-bucket (id_a <
@@ -764,19 +727,15 @@ def _bucket_pairs(buckets: DataFrame, id_col: str, keys: list[str]) -> DataFrame
     fewer shuffles; §2.3 — the grouped rows carry only ids). The pair
     volume is identical — a d-member bucket yields d(d-1)/2 candidates
     either way — but here they are generated inside the bucket's task
-    from one d-element array; LSH band/bucket parameters bound d exactly
-    as they bounded the join's per-bucket row blowup. Cross-bucket
-    duplicate pairs are removed by the same final ``distinct``."""
+    from its sorted d-element id array (:func:`_array_pairs`), never
+    through a join. Cross-bucket duplicate pairs are removed by the same
+    final ``distinct``."""
     grouped = (
         buckets.groupBy(*keys)
         .agg(F.sort_array(F.collect_set(F.col(id_col))).alias("__ids"))
         .filter(F.size("__ids") >= 2)
     )
-    return (
-        grouped.select(F.explode(_pair_arr(F.col("__ids"))).alias("__p"))
-        .select(F.col("__p.id_a").alias("id_a"), F.col("__p.id_b").alias("id_b"))
-        .distinct()
-    )
+    return _array_pairs(grouped).distinct()
 
 
 def _lsh_pairs_from_sets(
@@ -914,30 +873,17 @@ def hamming_near_pairs(
     if 64 % prefix_bands:
         raise ValueError("prefix_bands must divide 64")
     if collapse_exact:
-        # one groupBy aggregation (the signature long IS the group key)
-        # — same formulation as _minhash_collapse_graph: map-side
-        # partials collapse co-partitioned duplicates before the
-        # shuffle, no window sort, one coalesced per-distinct-signature
-        # frame instead of a per-doc one.
-        groups = _track(
-            sig.filter(F.col(hash_col).isNotNull())
-            .groupBy(hash_col)
-            .agg(
-                F.min(id_col).alias("__rep"),
-                F.collect_list(F.col(id_col)).alias("__ids"),
-            )
-            .coalesce(_collapse_parts(sig))
+        groups = _exact_groups(
+            sig.filter(F.col(hash_col).isNotNull()), hash_col, id_col
         )
-        members = groups.select(F.explode("__ids").alias(id_col), F.col("__rep"))
         reps = groups.select(F.col("__rep").alias(id_col), F.col(hash_col))
         rep_pairs = hamming_near_pairs(
             reps, id_col, hash_col, max_hamming, prefix_bands,
             collapse_exact=False,
         )
         return _expand_collapsed_pairs(
-            rep_pairs, members, id_col, threshold=0.0, value_col="hamming",
-            within_value=F.lit(0), within_keep=max_hamming >= 0,
-            within_groups=groups,
+            rep_pairs, groups, id_col, "hamming",
+            F.lit(0), F.col("hamming") <= max_hamming,
         )
     chunk_bits = 64 // prefix_bands
     # posexplode (see minhash_lsh_pairs): one pass over sig, not a

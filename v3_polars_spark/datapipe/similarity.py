@@ -31,6 +31,12 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import (
+    _bucket_pairs,
+    _exact_groups,
+    _expand_collapsed_pairs,
+    _track,
+)
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -194,52 +200,15 @@ def embedding_near_dup_lsh(
             v.alias("__v"),
             F.md5(v.cast("string")).alias("__gk"),
         )
-        from .dedup import _collapse_parts, _track
-
-        # one groupBy aggregation derives the whole collapse state —
-        # same formulation as dedup._minhash_collapse_graph: one
-        # persisted frame holding (rep, member-id array, vector) per
-        # DISTINCT vector (vs the window form's per-doc array-bearing
-        # frame plus separate members/reps persists), map-side partials
-        # on the 16-byte key instead of a window sort. first(__v) is a
-        # valid representative: the group key is the md5 of the rendered
-        # double array and distinct doubles render distinctly, so every
-        # row in a group carries the same values — which member's array
-        # survives is unobservable downstream (buckets, re-attach,
-        # self-cosine are value functions).
-        groups = _track(
-            keyed.groupBy("__gk")
-            .agg(
-                F.min(id_col).alias("__rep"),
-                F.collect_list(F.col(id_col)).alias("__ids"),
-                F.first("__v").alias("__v"),
-            )
-            .coalesce(_collapse_parts(keyed))
-        )
-        members = groups.select(F.explode("__ids").alias(id_col), F.col("__rep"))
+        groups = _exact_groups(keyed, "__gk", id_col, "__v")
         reps = groups.select(F.col("__rep").alias(id_col), F.col("__v").alias(vec_col))
         rep_pairs = embedding_near_dup_lsh(
             reps, dim, threshold, bits, tables, seed, id_col, vec_col,
             collapse_exact=False,
         )
-        # self-cosine only for groups that actually have within pairs:
-        # evaluating _cos on singleton reps the uncollapsed path never
-        # pairs would add failure modes it doesn't have (ANSI
-        # divide-by-zero on a lone all-zero vector)
-        rep_self = (
-            groups.filter(F.size("__ids") > 1)
-            .select(
-                F.col("__rep"),
-                _cos(F.col("__v"), F.col("__v")).alias("cosine"),
-            )
-            .filter(F.col("cosine") >= threshold)
-        )
-        from .dedup import _expand_collapsed_pairs
-
         return _expand_collapsed_pairs(
-            rep_pairs, members, id_col, threshold=threshold,
-            value_col="cosine", within_values=rep_self, within_keep=True,
-            within_groups=groups,
+            rep_pairs, groups, id_col, "cosine",
+            _cos(F.col("__v"), F.col("__v")), F.col("cosine") >= threshold,
         )
     buckets = F.array(
         *[lsh_bucket(v, dim, bits, seed + 1000003 * t) for t in range(tables)]
@@ -250,8 +219,6 @@ def embedding_near_dup_lsh(
     banded = df.select(
         F.col(id_col), F.posexplode(buckets).alias("table", "bucket")
     )
-    from .dedup import _bucket_pairs
-
     # one pass over the bucket stream (sorted-id-array pair expansion)
     # instead of a bucket self-join that evaluates the signature subtree
     # once per side — see dedup._bucket_pairs
@@ -489,8 +456,6 @@ def ivf_search(
         # ACTION on top of the bounded collect above; persist the
         # projection so the first action materializes it once
         # (tracked — release_intermediates frees it)
-        from .dedup import _track
-
         cents_df = _track(centroids.select("cluster_id", "centroid"))
         qcos = _cos(F.col("__qv"), F.col("centroid"))
         wq = Window.partitionBy(query_id_col).orderBy(
